@@ -67,7 +67,7 @@ private[streaming] object HttpRetry {
   * the `HttpClient` is `@transient lazy`, so each executor builds one
   * pooled client on first use and every task on that executor shares its
   * keep-alive connections — tasks never serialize a client (the same
-  * store-resolution stance as [[DocumentStore.resolve]]). Retry/backoff
+  * store-resolution stance as [[TagStore.resolve]]). Retry/backoff
   * is [[HttpRetry]], the exact policy the document store uses.
   */
 class HttpBlobFetcher(

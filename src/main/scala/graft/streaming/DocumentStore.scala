@@ -6,6 +6,52 @@ import scala.jdk.CollectionConverters._
 
 import graft.streaming.AnsModel._
 
+/** What the tag sink ([[TagPipeline.enrichAndUpsert]]) needs from a
+  * store, whatever its document format: tag one id, and read and write
+  * the exactly-once ledger's commit markers. Implemented by
+  * [[DocumentStore]] (typed [[AnsModel.AnsDoc]]s) and
+  * [[InMemoryRawDocumentStore]] (raw JSON text), each in terms of its own
+  * `get`/`update`/`upsert`, so a decorator overriding those sees every
+  * sink call.
+  */
+trait TagStore extends Serializable {
+
+  /** Append `tag` to document `id` iff absent, by optimistic
+    * read-modify-write; an unknown id becomes the minimal document
+    * carrying just the tag (`app.py:71-75`'s never-fail-the-batch
+    * contract).
+    */
+  def appendTag(id: String, tag: Tag): Unit
+
+  /** Whether the commit marker `id` exists. */
+  def hasMarker(id: String): Boolean
+
+  /** Write the commit marker `id` for `batchId` (last-writer-wins). */
+  def putMarker(id: String, batchId: Long): Unit
+}
+
+object TagStore {
+
+  /** Executor-side store handles. Task closures must not serialize a
+    * store (each deserialized task would mutate its own private copy);
+    * they capture a registry KEY and resolve it partition-locally — the
+    * same pattern a production sink uses for per-executor HTTP/DB
+    * connection pools. Local mode shares one JVM, so tests observe the
+    * same instance the driver registered.
+    */
+  private val registry = new ConcurrentHashMap[String, TagStore]()
+
+  def register(key: String, store: TagStore): Unit = registry.put(key, store)
+
+  def resolve(key: String): TagStore = {
+    val s = registry.get(key)
+    require(s != null,
+      s"no store registered under '$key' in this JVM — on a real " +
+        "cluster, register a connection-backed store in an executor plugin")
+    s
+  }
+}
+
 /** The document store the reference enriches against and writes back to
   * (Draft API: GET/PUT by `_id`, `tag.py:12-29`).
   *
@@ -17,11 +63,11 @@ import graft.streaming.AnsModel._
   *    append being a set-insert (`tag.py:39-40` / TagOps.appendIfAbsent).
   *
   * In production this is an HTTP client pooled per partition (or a keyed
-  * Delta table); tests use [[InMemoryDocumentStore]]. The trait keeps the
-  * pipeline source/sink-agnostic, the same way the Kinesis connector is a
-  * config swap for MemoryStream.
+  * Delta table); tests use [[InMemoryDocumentStore]]. As a [[TagStore]] it
+  * tags through [[update]] with [[DocumentStore.modifyAns]] and keeps its
+  * commit markers as `AnsDoc(markerId, Some(batchId), None)`.
   */
-trait DocumentStore extends Serializable {
+trait DocumentStore extends TagStore {
   def get(id: String): Option[AnsDoc]
   def upsert(doc: AnsDoc): Unit
   def snapshot: Seq[AnsDoc]
@@ -37,13 +83,19 @@ trait DocumentStore extends Serializable {
     * applied to the no-locking caveat).
     */
   def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc
+
+  def appendTag(id: String, tag: Tag): Unit = update(id)(cur =>
+    DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), tag))
+
+  def hasMarker(id: String): Boolean = get(id).nonEmpty
+
+  def putMarker(id: String, batchId: Long): Unit =
+    upsert(AnsDoc(id, Some(batchId), None))
 }
 
-/** Shared internals for the two JVM-local stores (typed AnsDoc and raw
-  * JSON): ONE implementation of the optimistic read-modify-write loop
-  * and of the executor-side registry, so a fix to either semantics
-  * applies to both stores (extracted r12 after the raw store initially
-  * copy-pasted them).
+/** The map behind both JVM-local stores (typed AnsDoc and raw JSON):
+  * one implementation of the optimistic read-modify-write loop that
+  * their `update`, and so their [[TagStore.appendTag]], runs on.
   *
   * The CAS: commit succeeds only if the entry still VALUE-equals the
   * snapshot `f` was computed from (an ABA with equal values is a no-op
@@ -70,22 +122,6 @@ private[streaming] class CasMap[V <: AnyRef] extends Serializable {
   }
 }
 
-/** Executor-side store registry — task closures capture a KEY and
-  * resolve it partition-locally (see [[DocumentStore.resolve]]'s
-  * scaladoc for why stores must never ride a task closure).
-  */
-private[streaming] class StoreRegistry[S](what: String) {
-  private val r = new ConcurrentHashMap[String, S]()
-  def register(key: String, store: S): Unit = r.put(key, store)
-  def resolve(key: String): S = {
-    val s = r.get(key)
-    require(s != null,
-      s"no $what registered under '$key' in this JVM — on a real " +
-        "cluster, register a connection-backed store in an executor plugin")
-    s
-  }
-}
-
 /** JVM-local store (driver + executors share the JVM under local[k], the
   * same reachability a foreachBatch HTTP client has on a cluster).
   */
@@ -105,27 +141,27 @@ class InMemoryDocumentStore extends DocumentStore {
   * byte-preserving splice instead of a typed round trip (`tag.py:64`'s
   * "modify only what you understand, preserve the rest"; the
   * [[InMemoryDocumentStore]]'s typed AnsDoc model would silently drop
-  * every undeclared field on write-back). Same CAS `update` contract.
+  * every undeclared field on write-back). As a [[TagStore]] it tags
+  * through [[update]] with [[RawAns.appendTagIfAbsent]] and keeps its
+  * commit markers as the minimal `{"_id": markerId}` document.
   */
-class InMemoryRawDocumentStore extends Serializable {
+class InMemoryRawDocumentStore extends TagStore {
   private val m = new CasMap[String]
   def get(id: String): Option[String] = m.get(id)
   def upsert(id: String, doc: String): Unit = m.put(id, doc)
   def snapshot: Map[String, String] = m.entries
   def size: Int = m.size
 
-  /** Optimistic read-modify-write, value-equality CAS (shared
-    * [[CasMap]] semantics with the typed store).
-    */
+  /** Optimistic read-modify-write, value-equality CAS ([[CasMap]]). */
   def update(id: String)(f: Option[String] => String): String = m.update(id)(f)
-}
 
-object InMemoryRawDocumentStore {
-  private val registry = new StoreRegistry[InMemoryRawDocumentStore](
-    "raw document store")
-  def register(key: String, store: InMemoryRawDocumentStore): Unit =
-    registry.register(key, store)
-  def resolve(key: String): InMemoryRawDocumentStore = registry.resolve(key)
+  def appendTag(id: String, tag: Tag): Unit = update(id)(cur =>
+    RawAns.appendTagIfAbsent(cur.getOrElse(RawAns.minimalDoc(id)), tag))
+
+  def hasMarker(id: String): Boolean = get(id).nonEmpty
+
+  def putMarker(id: String, batchId: Long): Unit =
+    upsert(id, RawAns.minimalDoc(id))
 }
 
 /** Durable file-backed store: one file per document under `root`,
@@ -303,20 +339,6 @@ object FileDocumentStore {
 }
 
 object DocumentStore {
-
-  /** Executor-side store handles. Task closures must not serialize a
-    * store (each deserialized task would mutate its own private copy);
-    * they capture a registry KEY and resolve it partition-locally — the
-    * same pattern a production sink uses for per-executor HTTP/DB
-    * connection pools. Local mode shares one JVM, so tests observe the
-    * same instance the driver registered.
-    */
-  private val registry = new StoreRegistry[DocumentStore]("DocumentStore")
-
-  def register(key: String, store: DocumentStore): Unit =
-    registry.register(key, store)
-
-  def resolve(key: String): DocumentStore = registry.resolve(key)
 
   /** The reference's `modify_ans` with the intended (bug-fixed) semantics:
     * append `tag` iff absent; a missing taxonomy or missing tags list

@@ -65,7 +65,7 @@ private[streaming] object AnsJson {
   *
   *  - one POOLED client per store instance (java.net.http keeps
   *    connections alive), resolved executor-locally through
-  *    [[DocumentStore.resolve]] like every store — tasks never serialize
+  *    [[TagStore.resolve]] like every store — tasks never serialize
   *    a client;
   *  - bounded RETRY with exponential backoff on connect errors and 5xx
   *    (the reference has none — one flaky GET kills the record,
@@ -108,10 +108,23 @@ class HttpDocumentStore(
   private def getWithTag(id: String): (Option[AnsDoc], Option[String]) = {
     val r = send(HttpRequest.newBuilder(docUri(id))
       .timeout(Duration.ofMillis(timeoutMs)).GET().build())
-    if (r.statusCode() == 404) (None, None)
-    else (Some(AnsJson.read(r.body())),
-      Option(r.headers().firstValue("ETag").orElse(null)))
+    r.statusCode() match {
+      case 404 => (None, None)
+      case 200 => (Some(AnsJson.read(r.body())),
+        Option(r.headers().firstValue("ETag").orElse(null)))
+      case _ => unexpected(r)
+    }
   }
+
+  /** Any status outside a request's contract fails loudly (the
+    * micro-batch fails and the engine retries it), never reads as
+    * success: a base URL missing its `/documents` context answers GET and
+    * PUT alike with 404, which would otherwise report a lost tag as
+    * written.
+    */
+  private def unexpected(r: HttpResponse[String]): Nothing =
+    throw new java.io.IOException(s"unexpected status: " +
+      s"${r.request().method()} ${r.uri()} -> ${r.statusCode()}")
 
   override def get(id: String): Option[AnsDoc] = getWithTag(id)._1
 
@@ -146,7 +159,9 @@ class HttpDocumentStore(
       val r = send(cond
         .PUT(HttpRequest.BodyPublishers.ofString(AnsJson.write(next)))
         .build())
-      if (r.statusCode() != 412) return next
+      val status = r.statusCode()
+      if (status / 100 == 2) return next
+      if (status != 412) unexpected(r)
       // lost the race — loop, re-read, recompute
     }
     throw new IllegalStateException("unreachable")

@@ -20,6 +20,11 @@ import graft.streaming.AnsModel._
   *  - a failed enrichment never fails the batch (`app.py:71-75`): rows
   *    missing from the store pass through untagged (left join semantics).
   *
+  * There is one sink, [[enrichAndUpsert]], over any [[TagStore]] — typed
+  * [[DocumentStore]]s and the raw-JSON [[InMemoryRawDocumentStore]]
+  * alike — and with it one exactly-once ledger: batchId-keyed commit
+  * markers ([[commitMarkerId]]) kept in the sink store itself.
+  *
   * The Kinesis connector is a config swap on the source DataFrame; nothing
   * below the source is connector-specific. Trigger cadence and batch cap
   * mirror the reference's governors (`app.py:78`: 3 s poll; `app.py:22`:
@@ -30,21 +35,24 @@ object TagPipeline {
   /** Reference poll cadence (`app.py:29,78`). */
   val PollInterval: Trigger = Trigger.ProcessingTime("3 seconds")
 
-  /** Enrich + tag one micro-batch against the store, write back.
+  /** Enrich + tag one micro-batch against the store, write back — the
+    * one tag sink, for every [[TagStore]] (typed or raw documents).
     *
     * This is the `foreachBatch` body: the reference's EP3 shape
     * (`tag.py:49-66` — GET by id, modify, PUT), executed PARTITION-LOCALLY
     * on the executors: no driver collect, upsert parallelism == partition
     * count. Task closures capture only the store's registry key
-    * (see [[DocumentStore.resolve]]); each partition resolves its
+    * (see [[TagStore.resolve]]); each partition resolves its
     * executor-local handle, the way a production sink resolves a pooled
     * HTTP/DB connection. A failed lookup never fails the batch
-    * (`app.py:71-75`): unknown ids create fresh docs.
+    * (`app.py:71-75`): unknown ids create fresh docs. Each id is tagged by
+    * optimistic read-modify-write (not raw PUT), so a concurrent editor's
+    * change and this tag append both survive.
     */
   def enrichAndUpsert(storeKey: String, tag: Tag,
       exactlyOnce: Boolean = false, runNs: String = "")(
       batch: DataFrame, batchId: Long): Unit = {
-    // EXACTLY-ONCE tier (r11, closing the delivery-semantics gap vs the
+    // EXACTLY-ONCE tier (closing the delivery-semantics gap vs the
     // reference's fire-and-forget PUT, tag.py:28): foreachBatch is
     // at-least-once — after a crash between the sink writes and the
     // engine's checkpoint commit, the whole batch REPLAYS with the same
@@ -57,26 +65,14 @@ object TagPipeline {
     // update stays idempotent too: markers make replays cheap and give
     // once-per-batch semantics; idempotence covers the partial-batch
     // crash window).
-    if (exactlyOnce &&
-        DocumentStore.resolve(storeKey)
-          .get(commitMarkerId(storeKey, batchId, runNs)).nonEmpty)
-      return
+    val marker = commitMarkerId(storeKey, batchId, runNs)
+    if (exactlyOnce && TagStore.resolve(storeKey).hasMarker(marker)) return
     batch.select(col("id")).na.drop().distinct()
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val store = DocumentStore.resolve(storeKey)
-        rows.foreach { row =>
-          val id = row.getString(0)
-          // optimistic read-modify-write (not raw PUT): a concurrent
-          // editor's change and this tag append both survive; see
-          // DocumentStore.update
-          store.update(id)(cur =>
-            DocumentStore.modifyAns(cur.getOrElse(AnsDoc(id, None, None)), tag))
-        }
+        val store = TagStore.resolve(storeKey)
+        rows.foreach(row => store.appendTag(row.getString(0), tag))
       }
-    if (exactlyOnce)
-      DocumentStore.resolve(storeKey)
-        .upsert(AnsDoc(commitMarkerId(storeKey, batchId, runNs),
-          Some(batchId), None))
+    if (exactlyOnce) TagStore.resolve(storeKey).putMarker(marker, batchId)
   }
 
   /** Reserved-id commit marker for the exactly-once ledger — lives in
@@ -85,9 +81,9 @@ object TagPipeline {
     * counters that reset to 0 when a query restarts against a fresh or
     * cleared checkpoint dir, so without the run namespace stale markers
     * from a prior run against the same store would silently swallow the
-    * new run's batches (r11 advisory). [[start]] derives runNs from the
-    * checkpoint path — same checkpoint ⇒ same namespace (replays
-    * dedup), new checkpoint ⇒ fresh namespace (nothing swallowed).
+    * new run's batches. [[start]] derives runNs from the checkpoint
+    * path — same checkpoint ⇒ same namespace (replays dedup), new
+    * checkpoint ⇒ fresh namespace (nothing swallowed).
     * One storeKey still belongs to one streaming query at a time — two
     * CONCURRENT queries sharing a storeKey+checkpoint would collide.
     */
@@ -104,10 +100,9 @@ object TagPipeline {
       .digest(checkpointDir.getBytes("UTF-8"))
       .take(6).map(b => f"$b%02x").mkString
 
-  /** The shared source half of [[start]]/[[startRaw]]: decode + the
-    * documented filter + watermarked id-dedup (exactly-once tagging
-    * under redelivery; state aged out by the watermark, 10 min ≫ any
-    * redelivery window). A source that already defined its own
+  /** The source half of [[start]]: decode + the documented filter +
+    * watermarked id-dedup (exactly-once tagging under redelivery; state
+    * aged out by the watermark, 10 min ≫ any redelivery window). A source that already defined its own
     * event-time watermark (e.g. the KPL-deaggregating consumer's
     * subsequence dedup) keeps it — Spark disallows REdefining a
     * watermark downstream of a stateful operator, and chaining the
@@ -128,13 +123,18 @@ object TagPipeline {
     *
     * @param wire streaming DataFrame with (data binary, shard string,
     *             ts timestamp) — MemoryStream in tests, Kinesis in prod.
+    * @param store typed or raw: with an [[InMemoryRawDocumentStore]] the
+    *             sink edits RAW documents via the byte-preserving splice,
+    *             the write path for stored documents carrying fields the
+    *             pipeline does not declare (ANS schemas evolve; the typed
+    *             store would drop them).
     */
-  def start(spark: SparkSession, wire: DataFrame, store: DocumentStore,
+  def start(spark: SparkSession, wire: DataFrame, store: TagStore,
       checkpointDir: String, tag: Tag = AutoTag,
       trigger: Trigger = PollInterval,
       storeKey: String = "default",
       exactlyOnce: Boolean = false): StreamingQuery = {
-    DocumentStore.register(storeKey, store)
+    TagStore.register(storeKey, store)
     dedupedStream(wire).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -145,67 +145,21 @@ object TagPipeline {
       .start()
   }
 
-  /** Raw-JSON foreachBatch body: the OPEN-SCHEMA write-back (`tag.py:64`
-    * / q189's splice) against a store of WHOLE documents — every byte a
-    * previous writer stored survives, including fields this pipeline
-    * does not declare. Unknown ids initialize to the minimal `{_id}`
-    * doc, then the splice creates `taxonomy.tags` (`app.py:71-75`'s
-    * never-fail-the-batch contract). Same partition-local registry
-    * resolution as [[enrichAndUpsert]].
-    */
-  def enrichAndUpsertRaw(storeKey: String, tag: Tag,
-      exactlyOnce: Boolean = false, runNs: String = "")(
-      batch: DataFrame, batchId: Long): Unit = {
-    // same exactly-once ledger as the typed sink ([[enrichAndUpsert]]):
-    // a batchId-keyed commit marker in the SAME store, namespaced by the
-    // checkpoint-derived run id, written strictly after the data writes
-    if (exactlyOnce &&
-        InMemoryRawDocumentStore.resolve(storeKey)
-          .get(commitMarkerId(storeKey, batchId, runNs)).nonEmpty)
-      return
-    batch.select(col("id")).na.drop().distinct()
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val store = InMemoryRawDocumentStore.resolve(storeKey)
-        rows.foreach { row =>
-          val id = row.getString(0)
-          store.update(id)(cur => RawAns.appendTagIfAbsent(
-            cur.getOrElse(RawAns.minimalDoc(id)), tag))
-        }
-      }
-    if (exactlyOnce)
-      InMemoryRawDocumentStore.resolve(storeKey)
-        .upsert(commitMarkerId(storeKey, batchId, runNs),
-          RawAns.minimalDoc(commitMarkerId(storeKey, batchId, runNs)))
-  }
-
-  /** [[start]]'s open-schema twin: same source/decode/dedup stages, but
-    * the sink edits RAW documents via the byte-preserving splice — the
-    * write path a production consumer runs when stored documents carry
-    * fields the pipeline does not declare (ANS schemas evolve; the
-    * typed sink would drop them). Byte-level preservation under
-    * streaming redelivery is pinned in StreamingSpec.
-    */
+  /** [[start]] on a raw store under its own default registry key. */
   def startRaw(spark: SparkSession, wire: DataFrame,
       store: InMemoryRawDocumentStore, checkpointDir: String,
       tag: Tag = AutoTag, trigger: Trigger = PollInterval,
       storeKey: String = "default-raw",
-      exactlyOnce: Boolean = false): StreamingQuery = {
-    InMemoryRawDocumentStore.register(storeKey, store)
-    dedupedStream(wire).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(enrichAndUpsertRaw(storeKey, tag, exactlyOnce,
-        runNamespace(checkpointDir)) _)
-      .start()
-  }
+      exactlyOnce: Boolean = false): StreamingQuery =
+    start(spark, wire, store, checkpointDir, tag, trigger, storeKey,
+      exactlyOnce)
 
   /** Batch twin of [[start]] for a bounded event log (same expressions —
     * Structured Streaming's batch≡stream unification).
     */
-  def runBatch(wire: DataFrame, store: DocumentStore, tag: Tag = AutoTag,
+  def runBatch(wire: DataFrame, store: TagStore, tag: Tag = AutoTag,
       storeKey: String = "default-batch"): Unit = {
-    DocumentStore.register(storeKey, store)
+    TagStore.register(storeKey, store)
     val projected = EventDecoder.decodeAndFilter(wire)
       .dropDuplicates("id")
     enrichAndUpsert(storeKey, tag)(projected.toDF(), 0L)

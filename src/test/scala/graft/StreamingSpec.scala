@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.Codec
 import graft.streaming._
@@ -581,50 +581,58 @@ class StreamingSpec extends SparkSpec {
     def startQuery() = TagPipeline.start(spark, ms.toDF(), store, ckpt,
       trigger = Trigger.ProcessingTime(0), storeKey = "exactly-once",
       exactlyOnce = true)
-    val q1 = startQuery()
-    ms.addData(ev(story("X"), 0), ev(story("Y"), 1))
-    q1.processAllAvailable()
-    q1.stop()
-    val afterFirst = updates.get()
-    assert(afterFirst >= 2, s"expected the two docs tagged, got $afterFirst updates")
-    assert(store.get(TagPipeline.commitMarkerId("exactly-once", 0L,
-        TagPipeline.runNamespace(ckpt))).nonEmpty,
-      "batch 0 commit marker missing")
-    // crash window: sink writes landed, engine commit did not
-    val commits = java.nio.file.Paths.get(ckpt, "commits")
-    val last = {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.list(commits)
-      try s.iterator().asScala
-        .filter(!_.getFileName.toString.startsWith("."))
-        .toSeq.maxBy(_.getFileName.toString)
-      finally s.close()
-    }
-    java.nio.file.Files.delete(last)
-    // local FS keeps a ChecksumFileSystem sidecar; a stale .crc would
-    // make the replay's re-commit look like a concurrent writer
-    java.nio.file.Files.deleteIfExists(
-      last.resolveSibling("." + last.getFileName.toString + ".crc"))
-    val q2 = startQuery()
-    q2.processAllAvailable() // replays the batch; the marker must gate it
-    assert(updates.get() == afterFirst,
-      s"replayed batch re-executed the sink: ${updates.get()} != $afterFirst updates")
-    assert(store.get("X").exists(_.taxonomy.get.tags.get == Seq(AutoTag)))
-    // fresh data after recovery still flows (a new batchId has no marker)
-    ms.addData(ev(story("Z"), 2))
-    q2.processAllAvailable()
-    q2.stop()
-    prevValidation match {
-      case Some(v) => spark.conf.set(validationConf, v)
-      case None    => spark.conf.unset(validationConf)
+    var q1: StreamingQuery = null
+    var q2: StreamingQuery = null
+    val afterFirst = try {
+      q1 = startQuery()
+      ms.addData(ev(story("X"), 0), ev(story("Y"), 1))
+      q1.processAllAvailable()
+      q1.stop()
+      val afterFirst = updates.get()
+      assert(afterFirst >= 2, s"expected the two docs tagged, got $afterFirst updates")
+      assert(store.get(TagPipeline.commitMarkerId("exactly-once", 0L,
+          TagPipeline.runNamespace(ckpt))).nonEmpty,
+        "batch 0 commit marker missing")
+      // crash window: sink writes landed, engine commit did not
+      val commits = java.nio.file.Paths.get(ckpt, "commits")
+      val last = {
+        import scala.jdk.CollectionConverters._
+        val s = java.nio.file.Files.list(commits)
+        try s.iterator().asScala
+          .filter(!_.getFileName.toString.startsWith("."))
+          .toSeq.maxBy(_.getFileName.toString)
+        finally s.close()
+      }
+      java.nio.file.Files.delete(last)
+      // local FS keeps a ChecksumFileSystem sidecar; a stale .crc would
+      // make the replay's re-commit look like a concurrent writer
+      java.nio.file.Files.deleteIfExists(
+        last.resolveSibling("." + last.getFileName.toString + ".crc"))
+      q2 = startQuery()
+      q2.processAllAvailable() // replays the batch; the marker must gate it
+      assert(updates.get() == afterFirst,
+        s"replayed batch re-executed the sink: ${updates.get()} != $afterFirst updates")
+      assert(store.get("X").exists(_.taxonomy.get.tags.get == Seq(AutoTag)))
+      // fresh data after recovery still flows (a new batchId has no marker)
+      ms.addData(ev(story("Z"), 2))
+      q2.processAllAvailable()
+      afterFirst
+    } finally {
+      // the disabled validation must never leak into later suites, even
+      // when an assertion above fails
+      Seq(q1, q2).filter(_ != null).foreach(_.stop())
+      prevValidation match {
+        case Some(v) => spark.conf.set(validationConf, v)
+        case None    => spark.conf.unset(validationConf)
+      }
     }
     assert(store.get("Z").exists(_.taxonomy.get.tags.get == Seq(AutoTag)),
       "post-recovery batch lost")
     assert(updates.get() > afterFirst, "post-recovery batch never ran")
     // FRESH checkpoint dir against the SAME store: batchIds reset to 0,
     // so without the run-namespaced marker key the stale batch-0 marker
-    // above would silently swallow the new run's first batch (r11
-    // advisory). The checkpoint-path namespace keeps the ledgers apart.
+    // above would silently swallow the new run's first batch. The
+    // checkpoint-path namespace keeps the ledgers apart.
     val beforeFresh = updates.get()
     val ckpt2 = Files.createTempDirectory("graft-exactly-once2-").toString
     val ms2 = MemoryStream[Wire]
@@ -757,6 +765,22 @@ class StreamingSpec extends SparkSpec {
     val e = intercept[java.io.IOException](store.get("X"))
     assert(e.getMessage.contains("2 attempts"),
       s"retries must be bounded and reported, got: ${e.getMessage}")
+  }
+
+  test("http-backed store: a status outside the request's contract fails the update loudly") {
+    // a base URL missing the /documents context: the server answers GET
+    // and PUT alike with 404 — "absent" for the read is fine, but the
+    // write must not be reported as committed
+    val stub = new DraftApiStub
+    try {
+      val store = new HttpDocumentStore(stub.baseUrl + "/nope", backoffMs = 5L)
+      val e = intercept[java.io.IOException](
+        store.update("X")(c => DocumentStore.modifyAns(
+          c.getOrElse(AnsDoc("X", None, None)), AutoTag)))
+      assert(e.getMessage.contains("PUT") && e.getMessage.contains("/nope/") &&
+        e.getMessage.contains("404"),
+        s"the failure must name method, URI and status, got: ${e.getMessage}")
+    } finally stub.stop()
   }
 
   test("optimistic update: concurrent tagger and editor never drop either change") {
@@ -1810,29 +1834,69 @@ class StreamingSpec extends SparkSpec {
     assert(removed.count() > 0L, "fixture retracts nothing")
   }
 
-  test("raw-sink exactly-once ledger: a committed batchId is skipped wholesale, marker written after the data") {
+  test("sink exactly-once ledger: a committed batchId is skipped wholesale, marker written after the data") {
     import spark.implicits._
-    val store = new graft.streaming.InMemoryRawDocumentStore
-    graft.streaming.InMemoryRawDocumentStore.register("raw-eo", store)
+    // per-store call order: ("update" | "marker", id), recorded through
+    // the store's own update/upsert, which the sink goes through
+    type Calls = java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    def markerId(key: String, runNs: String) =
+      TagPipeline.commitMarkerId(key, 7L, runNs)
+    val typedCalls = new Calls
+    val typed = new InMemoryDocumentStore {
+      override def update(id: String)(f: Option[AnsDoc] => AnsDoc): AnsDoc = {
+        val r = super.update(id)(f); typedCalls.add(("update", id)); r
+      }
+      override def upsert(doc: AnsDoc): Unit = {
+        super.upsert(doc); typedCalls.add(("marker", doc._id))
+      }
+    }
+    val rawCalls = new Calls
+    val raw = new InMemoryRawDocumentStore {
+      override def update(id: String)(f: Option[String] => String): String = {
+        val r = super.update(id)(f); rawCalls.add(("update", id)); r
+      }
+      override def upsert(id: String, doc: String): Unit = {
+        super.upsert(id, doc); rawCalls.add(("marker", id))
+      }
+    }
+    // the tags each store kind carries on document `id`
+    val typedTags = (id: String) =>
+      typed.get(id).flatMap(_.taxonomy).flatMap(_.tags).getOrElse(Nil)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rawTags = (id: String) => raw.get(id).toSeq.flatMap(d =>
+      json.readTree(d).path("taxonomy").path("tags").elements().asScala
+        .map(t => Tag(t.get("slug").asText, t.get("text").asText)))
     val batch = Seq("A", "B").toDF("id")
-    TagPipeline.enrichAndUpsertRaw("raw-eo", AutoTag,
-      exactlyOnce = true, runNs = "ns1")(batch, 7L)
-    assert(store.get("A").nonEmpty && store.get("B").nonEmpty)
-    assert(store.get(TagPipeline.commitMarkerId("raw-eo", 7L, "ns1")).nonEmpty,
-      "commit marker missing after the batch")
-    val sizeAfter = store.size
-    // the replayed batch (same batchId, same run) is skipped WHOLESALE —
-    // even a tag change (a non-idempotent stand-in) leaves no trace
-    TagPipeline.enrichAndUpsertRaw("raw-eo", Tag("other", "other"),
-      exactlyOnce = true, runNs = "ns1")(batch, 7L)
-    assert(store.size == sizeAfter)
-    assert(!store.get("A").get.contains("other"),
-      "replayed committed batch re-executed its effects")
-    // a FRESH run namespace (new checkpoint dir) is not swallowed by the
-    // stale marker (the r11 advisory case, raw tier)
-    TagPipeline.enrichAndUpsertRaw("raw-eo", Tag("other", "other"),
-      exactlyOnce = true, runNs = "ns2")(batch, 7L)
-    assert(store.get("A").get.contains("other"))
+    for ((key, store, calls, tagsOf, size) <- Seq(
+        ("typed-eo", typed, typedCalls, typedTags, () => typed.size),
+        ("raw-eo", raw, rawCalls, rawTags, () => raw.size))) {
+      TagStore.register(key, store)
+      def run(tag: Tag, runNs: String): Unit = TagPipeline.enrichAndUpsert(
+        key, tag, exactlyOnce = true, runNs = runNs)(batch, 7L)
+      run(AutoTag, "ns1")
+      assert(tagsOf("A") == Seq(AutoTag) && tagsOf("B") == Seq(AutoTag), key)
+      assert(store.hasMarker(markerId(key, "ns1")),
+        s"$key: commit marker missing after the batch")
+      // the marker upsert comes after the last data update
+      val order = calls.asScala.toSeq
+      assert(order.map(_._2).toSet == Set("A", "B", markerId(key, "ns1")), key)
+      assert(order.last == ("marker", markerId(key, "ns1")) &&
+        order.init.forall(_._1 == "update"),
+        s"$key: marker not written strictly after the data: $order")
+      val sizeAfter = size()
+      val callsAfter = calls.size
+      // the replayed batch (same batchId, same run) is skipped WHOLESALE —
+      // even a tag change (a non-idempotent stand-in) leaves no trace
+      run(Tag("other", "other"), "ns1")
+      assert(size() == sizeAfter && calls.size == callsAfter,
+        s"$key: replayed committed batch re-executed its effects")
+      assert(tagsOf("A") == Seq(AutoTag), key)
+      // a FRESH run namespace (new checkpoint dir) is not swallowed by the
+      // stale marker
+      run(Tag("other", "other"), "ns2")
+      assert(tagsOf("A") == Seq(AutoTag, Tag("other", "other")),
+        s"$key: a fresh run namespace was swallowed by a stale marker")
+    }
   }
 
   test("streaming vocab + IVF state: point-fix changelogs converge to the q188/q192 batch combines") {
